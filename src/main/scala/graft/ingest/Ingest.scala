@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.imaging.ImageUdfs
@@ -51,20 +51,37 @@ object Ingest {
       .withColumn("statistics", expr("get_image_statistics(content)"))
   }
 
-  /** Streaming ingest: S1 source options per 02_Data Ingest.py:61-76.
-    * Admission is byte-based by default, mirroring the reference's
+  /** Paths a file index stats inline on the driver before it lists them
+    * through a Spark job (Spark's default is 32). A micro-batch's files are
+    * already enumerated, so [[source]] never wants the job.
+    */
+  private val InlineStatPaths = Int.MaxValue
+
+  /** The binaryFile image stream over `srcDir`: S1 source options per
+    * 02_Data Ingest.py:61-76, the one reader behind [[stream]] and
+    * [[graft.ml.StreamScoring.scoreStream]]. Admission is byte-based by
+    * default, mirroring the reference's
     * `cloudFiles.maxBytesPerTrigger = defaultParallelism * 512 MB`
     * (02:63,74) via the OSS source's equivalent option; pass
     * `maxFilesPerTrigger > 0` instead for a count cap (tests use this —
     * the two options are mutually exclusive in FileStreamOptions).
+    *
+    * The reader lives on a clone of `spark` whose discovery threshold
+    * makes every getBatch (and the restart replay of the last batch) stat
+    * its files on the driver instead of launching a listing job; the
+    * clone's ANALYZED plan is bound back to `spark`, so the query,
+    * `spark.streams` and its listeners stay the caller's — an unanalyzed
+    * plan would re-resolve the source on `spark` and list through jobs.
     */
-  def stream(spark: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String, maxFilesPerTrigger: Int = 0,
-      maxBytesPerTrigger: Long = 0L): StreamingQuery = {
+  def source(spark: SparkSession, srcDir: String, maxFilesPerTrigger: Int = 0,
+      maxBytesPerTrigger: Long = 0L): DataFrame = {
     val admission: Long =
       if (maxBytesPerTrigger > 0) maxBytesPerTrigger
       else spark.sparkContext.defaultParallelism * 512L * 1024 * 1024
-    val reader = spark.readStream
+    val listing = GraftBridge.cloneSession(spark)
+    listing.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      InlineStatPaths.toLong)
+    val reader = listing.readStream
       .format("binaryFile")
       .schema(graft.imaging.ImageSchema.binaryFileSchema) // streaming sources require an explicit schema
       .option("pathGlobFilter", "*.jpg")
@@ -73,14 +90,23 @@ object Ingest {
         reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
       else reader.option("maxBytesPerTrigger", admission))
       .load(srcDir)
-    enrich(spark, src).writeStream
+    GraftBridge.ofRows(spark, GraftBridge.logicalPlan(src))
+  }
+
+  /** Streaming ingest: [[source]] -> [[enrich]] -> the date-partitioned
+    * parquet sink, AvailableNow.
+    */
+  def stream(spark: SparkSession, srcDir: String, outDir: String,
+      checkpointDir: String, maxFilesPerTrigger: Int = 0,
+      maxBytesPerTrigger: Long = 0L): StreamingQuery =
+    enrich(spark, source(spark, srcDir, maxFilesPerTrigger, maxBytesPerTrigger))
+      .writeStream
       .format("parquet")
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .partitionBy("date")
       .trigger(Trigger.AvailableNow())
       .start(outDir)
-  }
 
   /** Batch variant of the same plan (tests + the demo query). */
   def batch(spark: SparkSession, srcDir: String): DataFrame = {

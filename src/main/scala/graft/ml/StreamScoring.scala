@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.imaging.ImageUdfs
+import graft.ingest.Ingest
 
 /** Entry point C (SURVEY.md §3.3): streaming inference. The binaryFile
   * stream is enriched with the tensorize/statistics features and scored
@@ -65,15 +66,12 @@ object StreamScoring {
       srcDir: String): LogisticRegressionModel =
     modelCache.getOrElseUpdate(srcDir, trainOnImages(spark, labeled))
 
-  /** U3/S5: streaming scoring into the (path, score) parquet sink. */
+  /** U3/S5: streaming scoring of the [[Ingest.source]] image stream into
+    * the (path, score) parquet sink.
+    */
   def scoreStream(spark: SparkSession, model: LogisticRegressionModel,
       srcDir: String, outDir: String, checkpointDir: String): StreamingQuery = {
-    val src = spark.readStream
-      .format("binaryFile")
-      .schema(graft.imaging.ImageSchema.binaryFileSchema)
-      .option("pathGlobFilter", "*.jpg")
-      .option("recursiveFileLookup", "true")
-      .load(srcDir)
+    val src = Ingest.source(spark, srcDir)
     val scored = model.transform(imageFeatures(spark, src))
       .select(col("path"),
         element_at(vector_to_array(col("probability")), 2).as("score"))

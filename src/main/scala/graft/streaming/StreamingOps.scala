@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import graft.{Q, QueryModule}
+import graft.{ConfWindow, Q, QueryModule}
 
 /** Structured-Streaming operators (SURVEY.md §1.4/§3.1): the engine's
   * streaming surface beyond the ingest pipeline — event-time windowed
@@ -23,6 +23,8 @@ object StreamingOps extends QueryModule {
   // the fixture dir — cache it like the split-source dir below.
   private val tsTypes =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
+
+  private[graft] def resetMemo(): Unit = tsTypes.clear()
 
   private def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types._
@@ -54,18 +56,15 @@ object StreamingOps extends QueryModule {
     }
   }
 
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** Run `f` with a transient shuffle-partition setting: streaming state
     * stores are per-shuffle-partition (each micro-batch commits delta
     * files for every partition of every store), so the partition count is
     * a per-query sizing knob — match it to state volume, not to the
     * session's batch default. At 100 TB it goes up, not down.
     */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = spark.conf.get(key)
-    val ndOld = spark.conf.getOption(ndKey)
-    spark.conf.set(key, n.toString)
+  private def withStatePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
     // No-data micro-batches exist to advance the watermark so append-mode
     // WINDOW aggregations flush their final windows and event-time timers
     // fire. Every query in this module emits its rows IN the data batch
@@ -74,15 +73,9 @@ object StreamingOps extends QueryModule {
     // no-data batch is a full per-partition state-store commit cycle that
     // produces nothing — skip it. Any future append-mode windowed agg or
     // timer-based processor must NOT run under this helper.
-    spark.conf.set(ndKey, "false")
-    try f finally {
-      spark.conf.set(key, old)
-      ndOld match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None    => spark.conf.unset(ndKey)
-      }
-    }
-  }
+    ConfWindow.withConf(spark,
+      "spark.sql.shuffle.partitions" -> n.toString,
+      NoDataBatches -> "false")(f)
 
   /** Event-time tumbling window + watermark, run to completion with
     * AvailableNow into a memory sink (complete mode emits every window,
@@ -371,14 +364,9 @@ object StreamingOps extends QueryModule {
     * emitted; the oracle applies the same cutoff, pinning Spark's
     * eviction boundary (window.end ≤ watermark) cross-engine.
     */
-  def appendWindowFinals(spark: SparkSession, sfDir: String): DataFrame = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val oldP = spark.conf.get(pKey)
-    val oldNd = spark.conf.getOption(ndKey)
-    spark.conf.set(pKey, "8")
-    spark.conf.set(ndKey, "true")
-    try graft.Tmp.withDir("graft_ck_finals") { ck =>
+  def appendWindowFinals(spark: SparkSession, sfDir: String): DataFrame =
+    ConfWindow.withConf(spark, "spark.sql.shuffle.partitions" -> "8",
+        NoDataBatches -> "true") { graft.Tmp.withDir("graft_ck_finals") { ck =>
       import graft.Num._
       val name = s"graft_stream_finals_${System.nanoTime()}"
       // group by the window() column itself — projecting .start inside
@@ -400,14 +388,7 @@ object StreamingOps extends QueryModule {
       val res = spark.table(name).orderBy("bucket_start").localCheckpoint()
       spark.catalog.dropTempView(name)
       res
-    } finally {
-      spark.conf.set(pKey, oldP)
-      oldNd match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None    => spark.conf.unset(ndKey)
-      }
-    }
-  }
+    }}
 
   // finals = every window whose end the final watermark (max ts − delay)
   // passed; the open tail is never emitted, by design
@@ -469,16 +450,9 @@ object StreamingOps extends QueryModule {
     * transformWithState; also the scale-correct store — state lives
     * off-heap/on-disk per executor instead of on the JVM heap).
     */
-  def withRocksDb[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def withRocksDb[T](spark: SparkSession)(f: => T): T =
+    ConfWindow.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(f)
 
   def twsSessionize(spark: SparkSession, sfDir: String): DataFrame =
     withStatePartitions(spark, 8) { withRocksDb(spark) { graft.Tmp.withDir("graft_ck_tws") { ck =>

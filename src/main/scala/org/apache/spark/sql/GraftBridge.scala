@@ -16,6 +16,12 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of the session with its own conf, functions and temp views:
+    * the same clone Spark makes for every streaming query at start.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** The analyzed logical plan backing a DataFrame. */
   def logicalPlan(df: DataFrame):
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -7,23 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * (fewer-partitions-than-parallelism) scan whose size estimate is both
   * KNOWN and at least spark.graft.fanout.minBytes; keyed fanout must be
   * absorbed by a downstream aggregation on the same keys (one exchange
-  * total). Uses its own session so the minBytes conf and tiny-threshold
-  * experiments cannot leak into the shared-suite session.
+  * total). Uses its own session, derived with newSession() from the
+  * shared one, so the minBytes conf and tiny-threshold experiments cannot
+  * leak into the shared-suite session.
   */
 class FanoutSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-fanout-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark = SparkSpec.session.newSession()
 
   private def withMinBytes[A](v: Long)(body: => A): A =
-    ConfWindow.withConf(spark, "spark.graft.fanout.minBytes", v.toString)(body)
+    ConfWindow.withConf(spark, "spark.graft.fanout.minBytes" -> v.toString)(body)
 
   private def scanDf = Tables.lineitem(spark, "/root/testdata/sf0.001")
     .select("l_orderkey", "l_partkey")
